@@ -522,8 +522,9 @@ object DedupOps {
     val conf = df.sparkSession.conf
     val key = "spark.sql.adaptive.enabled"
     val prev = conf.get(key)
-    conf.set(key, "false")
-    try materialize(df, checkpointDir) finally conf.set(key, prev)
+    conf.set(key, "false") // known session-conf flip: AQE off for the keyed checkpoint
+    try materialize(df, checkpointDir)
+    finally conf.set(key, prev) // known session-conf flip: restore AQE
   }
 
   /** Point the context at the reliable checkpoint dir (a no-op rebind if

@@ -20,7 +20,10 @@ import org.apache.spark.sql.functions._
   * Scale notes: the anti join shuffles on the merge keys only; with a small
   * batch AQE converts it to a broadcast anti join, so the target table is
   * never shuffled — the property that matters when `target` is 100 TB and
-  * the batch is a day's worth of data.
+  * the batch is a day's worth of data. On disk, `upsertIntoPath` lists the
+  * table but reads and rewrites only the partitions the batch touches,
+  * found from the batch's distinct partition tuples collected on the
+  * driver (bounded by the batch's partition count, not its rows).
   */
 object Upsert {
 
@@ -225,28 +228,21 @@ object Upsert {
   /** Partitioned parquet write (reference README.md:747-752). With
     * `dynamicOverwrite` only partitions present in `df` are replaced —
     * the scoped-rewrite semantics of README.md:1532-1534 without the loop.
+    * The overwrite mode is a per-write option (the file-source insert
+    * command prefers it over `spark.sql.sources.partitionOverwriteMode`),
+    * so the session conf is never touched and concurrent writers on one
+    * session cannot see each other's mode.
     */
   def writePartitioned(
       df: DataFrame,
       path: String,
       partitionCols: Seq[String],
       mode: SaveMode = SaveMode.Overwrite,
-      dynamicOverwrite: Boolean = true): Unit = {
-    val spark = df.sparkSession
-    // set-write-restore mutates session conf; serialize writers on the
-    // same session so a concurrent restore cannot flip an in-flight
-    // Overwrite back to STATIC (which would wipe the whole table)
-    spark.synchronized {
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-        if (dynamicOverwrite) "dynamic" else "static")
-      try df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
+      dynamicOverwrite: Boolean = true): Unit =
+    df.write.mode(mode)
+      .option("partitionOverwriteMode", if (dynamicOverwrite) "dynamic" else "static")
+      .partitionBy(partitionCols: _*)
+      .parquet(path)
 
   /** JSONL corpus export — the delivery format most training stacks
     * ingest (one JSON object per line, hive-partitioned directories,
@@ -421,19 +417,28 @@ object Upsert {
     sorted.format("parquet").saveAsTable(table)
   }
 
-  /** Incremental update of a partitioned parquet table on disk: read the
-    * target, merge the batch, rewrite only the affected partitions.
+  /** Incremental update of a partitioned parquet table on disk: merge the
+    * batch into the target and rewrite only the affected partitions.
     *
     * INVARIANT (default mode): partition-column values must be
     * functionally dependent on the merge keys — i.e. an update never moves
     * a key to a different partition. Under that invariant, "partitions
     * present in the batch" is exactly the set of partitions containing
-    * superseded rows, and the rewrite is minimal (target is scanned once,
-    * shuffled never). If a batch CAN move a key across partitions (e.g. a
-    * corrected partition value for an existing key), pass
+    * superseded rows, so only those partitions are read and rewritten:
+    * the batch is materialized once, its distinct partition tuples are
+    * collected on the driver (partition-tuple metadata: one slim row per
+    * batch partition, the same budget as the dynamic overwrite's own
+    * per-partition commit), and the target is read through a filter on
+    * its partition columns alone, which the file index applies to the
+    * listed partitions before any file is opened. The cost is O(batch
+    * partitions), not O(table); the target is never shuffled.
+    *
+    * If a batch CAN move a key across partitions (e.g. a corrected
+    * partition value for an existing key), pass
     * `keysMayChangePartitions = true`: the affected-partition set is then
-    * widened with the partitions currently holding the batch's keys (one
-    * extra key-projected scan of the target), so the superseded row in the
+    * widened with the partitions currently holding the batch's keys,
+    * which needs the target's key→partition map and therefore a
+    * key-projected scan of the WHOLE target, so the superseded row in the
     * old partition is rewritten away instead of surviving as a duplicate.
     *
     * Durability note: this reads and dynamic-overwrites the same path in
@@ -449,13 +454,76 @@ object Upsert {
       batch: DataFrame,
       keys: Seq[String],
       partitionCols: Seq[String],
-      keysMayChangePartitions: Boolean = false): Unit = {
+      keysMayChangePartitions: Boolean = false): Unit =
+    if (keysMayChangePartitions)
+      upsertMovingKeys(spark, targetPath, batch, keys, partitionCols)
+    else {
+      // the batch feeds the tuple collect, the key anti join and the
+      // union: persist it so it is computed once. persist, not
+      // localCheckpoint: cached blocks lost with an executor are
+      // recomputed from lineage instead of failing the write
+      val owned = batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+      val staged = if (owned) batch.persist() else batch
+      try {
+        val target = spark.read.parquet(targetPath)
+        // an empty batch names no partition: nothing to read or rewrite
+        batchPartitions(target, staged, partitionCols).foreach { inBatch =>
+          writePartitioned(merge(target.filter(inBatch), staged, keys),
+            targetPath, partitionCols)
+        }
+      } finally if (owned) staged.unpersist(blocking = false)
+    }
+
+  /** Predicate over `target`'s partition columns ONLY that selects the
+    * partitions holding `batch`'s partition tuples; None for an empty
+    * batch. Referencing nothing but partition columns makes it a
+    * partition filter, so the file index prunes before reading.
+    *
+    *  - Types: a partition value is compared in the type the target's
+    *    reader INFERRED from its directory name (a numeric-looking string
+    *    partition infers as int), so the batch values are cast to it.
+    *    A value that type cannot hold (`try_cast` gives NULL) names a
+    *    partition the target does not have yet and is left out — a NULL
+    *    from a failed cast must not select the NULL partition.
+    *  - NULLs: a null partition value is a real directory
+    *    (`__HIVE_DEFAULT_PARTITION__`). The tuples are compared as one
+    *    struct with IN, whose struct ordering treats NULL fields as equal
+    *    — null-safe, like `<=>`.
+    *  - Shape: one flat IN list (an `InSet` past a few values) however
+    *    many tuples the batch has, not a deep OR chain of conjunctions.
+    */
+  private def batchPartitions(
+      target: DataFrame, batch: DataFrame, partitionCols: Seq[String]): Option[Column] = {
+    val types = partitionCols.map(c => target.schema(c).dataType)
+    val n = partitionCols.length
+    val tuples = batch
+      .select(partitionCols.zip(types).map { case (c, t) => col(c).try_cast(t) } ++
+        partitionCols.map(c => col(c).isNull): _*)
+      .distinct()
+      .collect() // partition-tuple metadata: one row per batch partition
+    if (tuples.isEmpty) None
+    else {
+      val matchable = tuples.filter(r =>
+        (0 until n).forall(i => !r.isNullAt(i) || r.getBoolean(n + i)))
+      val lits = matchable.map(r => struct(partitionCols.indices.map(i =>
+        lit(r.get(i)).cast(types(i)).as(partitionCols(i))): _*))
+      Some(struct(partitionCols.map(col): _*).isin(lits.toSeq: _*))
+    }
+  }
+
+  /** [[upsertIntoPath]] for batches that may move a key to another
+    * partition: reads the whole target to find where the batch's keys
+    * live now. */
+  private def upsertMovingKeys(
+      spark: SparkSession,
+      targetPath: String,
+      batch: DataFrame,
+      keys: Seq[String],
+      partitionCols: Seq[String]): Unit = {
     val target = spark.read.parquet(targetPath)
-    // Only batch rows need writing: surviving target rows stay in their
-    // untouched partitions; the anti side tells us nothing new. But rows in
-    // *affected* partitions that are NOT superseded must be rewritten too
-    // (the partition is replaced wholesale), so restrict the merge to
-    // affected partitions before the dynamic overwrite.
+    // rows in affected partitions that are NOT superseded must be
+    // rewritten too (the partition is replaced wholesale), so restrict
+    // the merge to affected partitions before the dynamic overwrite.
     // partition-tuple comparisons must be NULL-SAFE (<=>): a null
     // partition value is a real directory (__HIVE_DEFAULT_PARTITION__),
     // and plain equi-join semantics would silently drop its rows from
@@ -467,17 +535,13 @@ object Upsert {
       df.toDF(df.columns.map(prefix + _): _*)
 
     val batchParts = batch.select(partitionCols.map(col): _*).distinct()
-    val affected =
-      if (!keysMayChangePartitions) batchParts
-      else {
-        // partitions that currently hold any of the batch's keys: their
-        // superseded rows must be rewritten out even if the batch writes
-        // those keys into DIFFERENT partitions
-        val batchKeys = batch.select(keys.map(col): _*).distinct()
-        val oldKeyParts = target.join(batchKeys, keys, "left_semi")
-          .select(partitionCols.map(col): _*).distinct()
-        batchParts.union(oldKeyParts).distinct()
-      }
+    // partitions that currently hold any of the batch's keys: their
+    // superseded rows must be rewritten out even if the batch writes
+    // those keys into DIFFERENT partitions
+    val batchKeys = batch.select(keys.map(col): _*).distinct()
+    val oldKeyParts = target.join(batchKeys, keys, "left_semi")
+      .select(partitionCols.map(col): _*).distinct()
+    val affected = batchParts.union(oldKeyParts).distinct()
     val targetAffected = target.join(
       renamed(affected, "__aff_"), partCond("__aff_" + _), "left_semi")
     val merged = merge(targetAffected, batch, keys)
@@ -489,27 +553,22 @@ object Upsert {
     // e.g. timestamps escape to '…00%3A00%3A00' with no fractional part),
     // and must materialize BEFORE the overwrite (the lazy plan reads the
     // pre-write target).
-    val emptiedDirs: Array[String] =
-      if (!keysMayChangePartitions) Array.empty
-      else {
-        val remaining = merged.select(partitionCols.map(col): _*).distinct()
-        val emptiedTuples = affected.join(
-          renamed(remaining, "__rem_"), partCond("__rem_" + _), "left_anti")
-        // input_file_name must be projected over the single-source scan
-        // BEFORE any join (it is undefined across multiple sources)
-        val targetFiles = target
-          .select(partitionCols.map(col) :+ input_file_name().as("_f"): _*)
-          .distinct()
-        targetFiles
-          .join(renamed(emptiedTuples, "__emp_"), partCond("__emp_" + _), "left_semi")
-          .select(col("_f")).distinct()
-          .collect() // partition-tuple metadata: file names of emptied partitions only
-          .map(_.getString(0))
-          .map(f => f.substring(0, f.lastIndexOf('/')))
-          .distinct
-      }
-    writePartitioned(merged, targetPath, partitionCols, SaveMode.Overwrite,
-      dynamicOverwrite = true)
+    val remaining = merged.select(partitionCols.map(col): _*).distinct()
+    val emptiedTuples = affected.join(
+      renamed(remaining, "__rem_"), partCond("__rem_" + _), "left_anti")
+    // input_file_name must be projected over the single-source scan
+    // BEFORE any join (it is undefined across multiple sources)
+    val targetFiles = target
+      .select(partitionCols.map(col) :+ input_file_name().as("_f"): _*)
+      .distinct()
+    val emptiedDirs = targetFiles
+      .join(renamed(emptiedTuples, "__emp_"), partCond("__emp_" + _), "left_semi")
+      .select(col("_f")).distinct()
+      .collect() // partition-tuple metadata: file names of emptied partitions only
+      .map(_.getString(0))
+      .map(f => f.substring(0, f.lastIndexOf('/')))
+      .distinct
+    writePartitioned(merged, targetPath, partitionCols)
     if (emptiedDirs.nonEmpty) {
       val root = new org.apache.hadoop.fs.Path(targetPath)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -329,15 +329,17 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  /** Every .scala file under `dir`, for the source-scan gates. */
+  private def scalaSources(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles).toSeq.flatten.flatMap {
+      case d if d.isDirectory => scalaSources(d)
+      case f if f.getName.endsWith(".scala") => Seq(f)
+      case _ => Nil
+    }
+
   test("scale gate: no collect() in main ops/streaming sources") {
-    def sources(dir: java.io.File): Seq[java.io.File] =
-      Option(dir.listFiles).toSeq.flatten.flatMap {
-        case d if d.isDirectory => sources(d)
-        case f if f.getName.endsWith(".scala") => Seq(f)
-        case _ => Nil
-      }
     val offenders = for {
-      f <- sources(new java.io.File("src/main/scala/graft"))
+      f <- scalaSources(new java.io.File("src/main/scala/graft"))
       line <- scala.io.Source.fromFile(f, "UTF-8").getLines()
       if line.matches(".*\\.collect\\(\\).*") && !line.trim.startsWith("//")
       // schema introspection collects metadata, not data
@@ -363,6 +365,23 @@ class PlanSpec extends SparkSpec {
       // class bruteTopK expresses as broadcast(queries), collected
       // only because the rows must reach a mapPartitions closure
       if !line.contains("driver-side query-set broadcast")
+    } yield s"${f.getPath}: $line"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("shared-session gate: no session-conf writes in main ops/streaming sources") {
+    // an operator that flips session conf changes every other query on a
+    // shared session while it runs (and leaks the flip if the restore is
+    // skipped); per-operation settings go on the reader/writer instead
+    val dirs = Seq("src/main/scala/graft/ops", "src/main/scala/graft/streaming")
+    assert(dirs.forall(d => new java.io.File(d).isDirectory), dirs)
+    val offenders = for {
+      f <- dirs.flatMap(d => scalaSources(new java.io.File(d)))
+      line <- scala.io.Source.fromFile(f, "UTF-8").getLines()
+      if line.matches(".*(conf\\.(set|unset)|setConf)\\(.*") && !line.trim.startsWith("//")
+      // the one known site (DedupOps.materializeKeyed's AQE-off keyed
+      // checkpoint) is marked line by line until it is replaced
+      if !line.contains("known session-conf flip")
     } yield s"${f.getPath}: $line"
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }

@@ -173,6 +173,171 @@ class UpsertSpec extends SparkSpec {
       "emptied null-partition directory must be removed")
   }
 
+  /** Every file under `dir` (relative path → size, mtime, content hash):
+    * equal maps mean the files are byte-identical and were not rewritten. */
+  private def fileStamps(dir: String): Map[String, (Long, Long, Int)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
+      root.relativize(p).toString ->
+        ((Files.size(p), Files.getLastModifiedTime(p).toMillis,
+          java.util.Arrays.hashCode(Files.readAllBytes(p))))
+    }.toMap
+    finally walk.close()
+  }
+
+  /** Runs `body` and returns the file scans over `dir` that the actions
+    * it ran executed (the execution-listener bus delivers async). */
+  private def scansOf(dir: String)(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      var last = -1; var tries = 0
+      while (plans.size != last && tries < 50) {
+        last = plans.size; Thread.sleep(100); tries += 1
+      }
+    } finally spark.listenerManager.unregister(listener)
+    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+      case q: QueryStageExec => q +: flatten(q.plan)
+      case c: CommandResultExec => c +: flatten(c.commandPhysicalPlan)
+      case other => other +: other.children.flatMap(flatten)
+    }
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq.flatMap(flatten).collect {
+      case s: FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.toUri.getPath.stripSuffix("/") == dir) => s
+    }
+  }
+
+  test("upsertIntoPath reads only the batch's partitions of the target") {
+    // 20 partitions over two levels, one level NULL in four of them; the
+    // batch touches 12 existing partitions (past the IN → InSet
+    // threshold, NULL ones included) and opens one new partition
+    val dir = Files.createTempDirectory("upsert_pruned").toFile.getAbsolutePath
+    val gs = Seq(Some("a"), Some("b"), Some("c"), Some("d"), None)
+    val rows = for (g <- gs; n <- 1 to 4; i <- 0 to 1)
+      yield (s"${g.getOrElse("null")}-$n-$i", g, n, i.toDouble)
+    Upsert.writePartitioned(rows.toDF("k", "g", "n", "v"), dir, Seq("g", "n"))
+    val touched = (for (g <- gs; n <- 1 to 4) yield (g, n)).filter {
+      case (g, n) => g.isEmpty || n <= 2 || g.contains("d")
+    }.take(12)
+    assert(touched.length == 12 && touched.exists(_._1.isEmpty))
+    val batch = (touched.map { case (g, n) => (s"${g.getOrElse("null")}-$n-0", g, n, 100.0) } :+
+      (("e-1-0", Some("e"), 1, 7.0))).toDF("k", "g", "n", "v")
+    def partDir(g: Option[String], n: Int) =
+      s"$dir/g=${g.getOrElse("__HIVE_DEFAULT_PARTITION__")}/n=$n"
+    val untouched = (for (g <- gs; n <- 1 to 4) yield (g, n)).filterNot(touched.contains)
+    val before = untouched.map { case (g, n) => fileStamps(partDir(g, n)) }
+
+    val scans = scansOf(dir) {
+      Upsert.upsertIntoPath(spark, dir, batch, Seq("k"), Seq("g", "n"))
+    }
+    assert(scans.nonEmpty, "the upsert ran no file scan over the target")
+    scans.foreach { s =>
+      assert(s.partitionFilters.nonEmpty, s"target scan is not partition-filtered: $s")
+      assert(s.metrics("numPartitions").value == 12,
+        s"target scan read ${s.metrics("numPartitions").value} partitions, not the batch's 12")
+    }
+    val superseded = touched.map { case (g, n) => s"${g.getOrElse("null")}-$n-0" }.toSet
+    val expected = rows.filterNot(r => superseded.contains(r._1)).toSet ++
+      batch.as[(String, Option[String], Int, Double)].collect()
+    val after = spark.read.parquet(dir).select($"k", $"g", $"n", $"v")
+      .as[(String, Option[String], Int, Double)].collect()
+    assert(after.length == expected.size && after.toSet == expected)
+    assert(untouched.map { case (g, n) => fileStamps(partDir(g, n)) } == before,
+      "an untouched partition was rewritten")
+  }
+
+  test("upsertIntoPath rewrites the NULL partition and keeps its non-superseded rows") {
+    val dir = Files.createTempDirectory("upsert_nullpart").toFile.getAbsolutePath
+    val t0 = Seq(
+      ("k1", Some("locA"), 1.0),
+      ("k2", None: Option[String], 2.0),
+      ("k3", None: Option[String], 3.0))
+      .toDF("name", "location", "temp")
+    Upsert.writePartitioned(t0, dir, Seq("location"))
+    val locABefore = fileStamps(s"$dir/location=locA")
+    val nullDir = s"$dir/location=__HIVE_DEFAULT_PARTITION__"
+    val nullBefore = fileStamps(nullDir)
+    Upsert.upsertIntoPath(spark, dir,
+      Seq(("k2", None: Option[String], 22.0)).toDF("name", "location", "temp"),
+      Seq("name"), Seq("location"))
+    val after = spark.read.parquet(dir).select($"name", $"location", $"temp")
+      .as[(String, Option[String], Double)].collect()
+    assert(after.toSet == Set(
+      ("k1", Some("locA"), 1.0), ("k2", None, 22.0), ("k3", None, 3.0)) &&
+      after.length == 3, after.toSeq)
+    assert(fileStamps(nullDir) != nullBefore, "the NULL partition was not rewritten")
+    assert(fileStamps(s"$dir/location=locA") == locABefore)
+  }
+
+  test("upsertIntoPath with an empty batch leaves every file byte-identical") {
+    val dir = Files.createTempDirectory("upsert_empty").toFile.getAbsolutePath
+    Upsert.writePartitioned(target, dir, Seq("location"))
+    val before = fileStamps(dir)
+    Upsert.upsertIntoPath(spark, dir, batch.limit(0), Seq("location", "date"), Seq("location"))
+    assert(fileStamps(dir) == before)
+  }
+
+  test("upsertIntoPath matches numeric-looking partition values the target infers as int") {
+    val dir = Files.createTempDirectory("upsert_numeric").toFile.getAbsolutePath
+    Upsert.writePartitioned(
+      Seq(("k1", "7", 1.0), ("k2", "7", 2.0), ("k3", "12", 3.0)).toDF("name", "code", "temp"),
+      dir, Seq("code"))
+    assert(spark.read.parquet(dir).schema("code").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    val twelveBefore = fileStamps(s"$dir/code=12")
+    Upsert.upsertIntoPath(spark, dir,
+      Seq(("k1", "7", 10.0)).toDF("name", "code", "temp"), Seq("name"), Seq("code"))
+    val after = spark.read.parquet(dir).select($"name", $"code", $"temp")
+      .as[(String, Int, Double)].collect()
+    // k2 survives: a missed match would rewrite code=7 with the batch alone
+    assert(after.toSet == Set(("k1", 7, 10.0), ("k2", 7, 2.0), ("k3", 12, 3.0)) &&
+      after.length == 3, after.toSeq)
+    assert(fileStamps(s"$dir/code=12") == twelveBefore)
+  }
+
+  test("writes and upserts leave the session conf unchanged; the overwrite mode is per write") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val confBefore = spark.conf.getAll
+    val modeBefore = spark.conf.getOption(key)
+    val dir = Files.createTempDirectory("upsert_conf").toFile.getAbsolutePath
+    Upsert.writePartitioned(target, dir, Seq("location"))
+    assert(spark.conf.getOption(key) == modeBefore)
+    Upsert.writePartitioned(batch, dir, Seq("location"), dynamicOverwrite = false)
+    assert(spark.conf.getOption(key) == modeBefore)
+    Upsert.upsertIntoPath(spark, dir, batch, Seq("location", "date"), Seq("location"))
+    Upsert.upsertIntoPath(spark, dir, batch, Seq("location", "date"), Seq("location"),
+      keysMayChangePartitions = true)
+    assert(spark.conf.getAll == confBefore)
+    // the write's own mode wins over the session's, both ways
+    val s2 = spark.newSession()
+    s2.conf.set(key, "static")
+    val dir2 = Files.createTempDirectory("upsert_conf2").toFile.getAbsolutePath
+    Upsert.writePartitioned(s2.createDataFrame(target.rdd, target.schema),
+      dir2, Seq("location"))
+    Upsert.writePartitioned(s2.createDataFrame(batch.rdd, batch.schema),
+      dir2, Seq("location"))
+    // dynamic: loc1 becomes the batch's 2 rows, loc2 keeps its 2
+    assert(s2.read.parquet(dir2).count() == 4, "dynamic write replaced the whole table")
+    s2.conf.set(key, "dynamic")
+    Upsert.writePartitioned(s2.createDataFrame(batch.rdd, batch.schema),
+      dir2, Seq("location"), dynamicOverwrite = false)
+    assert(s2.read.parquet(dir2).count() == 2, "static write kept untouched partitions")
+  }
+
   test("compactPartitions merges small files, leaves healthy partitions byte-identical") {
     val dir = java.nio.file.Files.createTempDirectory("compact").toFile.getAbsolutePath
     // partition g=a: 8 tiny files (fragmented by an artificial repartition);

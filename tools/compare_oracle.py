@@ -45,14 +45,21 @@ def main():
         if key not in oracle:
             print(f"  [rows-only] {key}: {len(spark_df)} rows")
             continue
-        duck_df = con.execute(oracle[key]).fetchdf()
-        spark_types = {
-            r[0]: norm_type(r[1]) for r in con.execute(
-                f"DESCRIBE SELECT * FROM read_parquet('{d}/*.parquet')"
-            ).fetchall()}
-        duck_types = {
-            r[0]: norm_type(r[1])
-            for r in con.execute(f"DESCRIBE {oracle[key]}").fetchall()}
+        # a failing oracle (e.g. a staged artifact it reads is missing)
+        # fails its own key; the other keys are still compared
+        try:
+            duck_df = con.execute(oracle[key]).fetchdf()
+            spark_types = {
+                r[0]: norm_type(r[1]) for r in con.execute(
+                    f"DESCRIBE SELECT * FROM read_parquet('{d}/*.parquet')"
+                ).fetchall()}
+            duck_types = {
+                r[0]: norm_type(r[1])
+                for r in con.execute(f"DESCRIBE {oracle[key]}").fetchall()}
+        except duckdb.Error as e:
+            n_fail += 1
+            print(f"  [FAIL] {key}: oracle error: {e}")
+            continue
         spark_df = spark_df[sorted(spark_df.columns)]
         duck_df = duck_df[sorted(duck_df.columns)]
         ok = True
