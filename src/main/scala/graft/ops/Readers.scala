@@ -11,11 +11,17 @@ object Readers {
     * Explicit schema wins at scale: inference reads every file twice and
     * samples on the executor; a declared StructType makes the scan
     * single-pass and the plan deterministic.
+    *
+    * A declared schema is a contract, so it is read in `FAILFAST` mode: a
+    * file that is not valid JSON, or whose value cannot take its declared
+    * type, fails the read with `FAILED_READ_FILE` naming the file instead
+    * of becoming a row of NULLs. Callers that want to quarantine such
+    * files use [[jsonMultiLineTolerant]].
     */
   def jsonMultiLine(spark: SparkSession, path: String,
       schema: Option[StructType] = None): DataFrame = {
     val r = spark.read.option("multiLine", true)
-    schema.fold(r)(s => r.schema(s)).json(path)
+    schema.fold(r)(s => r.schema(s).option("mode", "FAILFAST")).json(path)
   }
 
   /** Whole-file binary scan: one row per file with (path, length,

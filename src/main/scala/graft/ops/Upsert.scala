@@ -1,7 +1,15 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Incremental MERGE semantics (SURVEY.md §2.10).
   *
@@ -20,10 +28,12 @@ import org.apache.spark.sql.functions._
   * Scale notes: the anti join shuffles on the merge keys only; with a small
   * batch AQE converts it to a broadcast anti join, so the target table is
   * never shuffled — the property that matters when `target` is 100 TB and
-  * the batch is a day's worth of data. On disk, `upsertIntoPath` lists the
-  * table but reads and rewrites only the partitions the batch touches,
-  * found from the batch's distinct partition tuples collected on the
-  * driver (bounded by the batch's partition count, not its rows).
+  * the batch is a day's worth of data. On disk, `upsertIntoPath` lists,
+  * reads and rewrites only the partition directories the batch touches,
+  * named from the batch's distinct partition tuples collected on the
+  * driver (bounded by the batch's partition count, not its rows); the
+  * table's schema comes from one file footer, and its partition values
+  * are read in the batch's types.
   */
 object Upsert {
 
@@ -424,14 +434,22 @@ object Upsert {
     * functionally dependent on the merge keys — i.e. an update never moves
     * a key to a different partition. Under that invariant, "partitions
     * present in the batch" is exactly the set of partitions containing
-    * superseded rows, so only those partitions are read and rewritten:
-    * the batch is materialized once, its distinct partition tuples are
-    * collected on the driver (partition-tuple metadata: one slim row per
-    * batch partition, the same budget as the dynamic overwrite's own
-    * per-partition commit), and the target is read through a filter on
-    * its partition columns alone, which the file index applies to the
-    * listed partitions before any file is opened. The cost is O(batch
-    * partitions), not O(table); the target is never shuffled.
+    * superseded rows, so only those partitions are listed, read and
+    * rewritten. The batch is materialized once and its distinct partition
+    * tuples are collected on the driver (partition-tuple metadata: one
+    * slim row per batch partition, the same budget as the dynamic
+    * overwrite's own per-partition commit), as strings in the session
+    * time zone, which is how the writer formats them. Each tuple names its
+    * leaf directory through the writer's own escaping (NULL →
+    * `__HIVE_DEFAULT_PARTITION__`), and only the directories that exist
+    * are opened, so the rest of the table is never listed. The table's
+    * data schema comes from one file footer, read on the driver without a
+    * Spark job, and its partition values are read in the BATCH's types,
+    * so a zero-padded string partition (`code=007`) stays a string
+    * instead of being inferred as the int 7. A batch whose partitions are
+    * all new, as every batch into a target that does not exist yet, is
+    * written as it is. The cost is O(batch partitions), not O(table); the
+    * target is never shuffled.
     *
     * If a batch CAN move a key across partitions (e.g. a corrected
     * partition value for an existing key), pass
@@ -465,49 +483,47 @@ object Upsert {
       val owned = batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE
       val staged = if (owned) batch.persist() else batch
       try {
-        val target = spark.read.parquet(targetPath)
+        val tuples = staged
+          .select(partitionCols.map(c => col(c).cast("string")): _*)
+          .distinct()
+          .collect() // partition-tuple metadata: one row per batch partition
         // an empty batch names no partition: nothing to read or rewrite
-        batchPartitions(target, staged, partitionCols).foreach { inBatch =>
-          writePartitioned(merge(target.filter(inBatch), staged, keys),
-            targetPath, partitionCols)
+        if (tuples.nonEmpty) {
+          val root = new Path(targetPath)
+          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val dirs = tuples.toSeq.map(r => ExternalCatalogUtils.generatePartitionPath(
+            partitionCols.indices.map(i => partitionCols(i) -> r.getString(i)).toMap,
+            partitionCols, root)).filter(fs.exists)
+          val merged = readPartitions(spark, fs, targetPath, dirs, staged.schema, partitionCols)
+            .fold(staged)(merge(_, staged, keys))
+          writePartitioned(merged, targetPath, partitionCols)
         }
       } finally if (owned) staged.unpersist(blocking = false)
     }
 
-  /** Predicate over `target`'s partition columns ONLY that selects the
-    * partitions holding `batch`'s partition tuples; None for an empty
-    * batch. Referencing nothing but partition columns makes it a
-    * partition filter, so the file index prunes before reading.
-    *
-    *  - Types: a partition value is compared in the type the target's
-    *    reader INFERRED from its directory name (a numeric-looking string
-    *    partition infers as int), so the batch values are cast to it.
-    *    A value that type cannot hold (`try_cast` gives NULL) names a
-    *    partition the target does not have yet and is left out — a NULL
-    *    from a failed cast must not select the NULL partition.
-    *  - NULLs: a null partition value is a real directory
-    *    (`__HIVE_DEFAULT_PARTITION__`). The tuples are compared as one
-    *    struct with IN, whose struct ordering treats NULL fields as equal
-    *    — null-safe, like `<=>`.
-    *  - Shape: one flat IN list (an `InSet` past a few values) however
-    *    many tuples the batch has, not a deep OR chain of conjunctions.
-    */
-  private def batchPartitions(
-      target: DataFrame, batch: DataFrame, partitionCols: Seq[String]): Option[Column] = {
-    val types = partitionCols.map(c => target.schema(c).dataType)
-    val n = partitionCols.length
-    val tuples = batch
-      .select(partitionCols.zip(types).map { case (c, t) => col(c).try_cast(t) } ++
-        partitionCols.map(c => col(c).isNull): _*)
-      .distinct()
-      .collect() // partition-tuple metadata: one row per batch partition
-    if (tuples.isEmpty) None
-    else {
-      val matchable = tuples.filter(r =>
-        (0 until n).forall(i => !r.isNullAt(i) || r.getBoolean(n + i)))
-      val lits = matchable.map(r => struct(partitionCols.indices.map(i =>
-        lit(r.get(i)).cast(types(i)).as(partitionCols(i))): _*))
-      Some(struct(partitionCols.map(col): _*).isin(lits.toSeq: _*))
+  /** The rows of the partition directories `dirs` under `targetPath`, or
+    * None if they hold no data file. Only `dirs` are listed. The data
+    * schema is read from the footer of one of their files on the driver
+    * (no schema-inference job); the partition columns take their types
+    * from `batchSchema`, so the directory values parse in the batch's
+    * types rather than in types inferred from the directory names. */
+  private def readPartitions(
+      spark: SparkSession, fs: FileSystem, targetPath: String, dirs: Seq[Path],
+      batchSchema: StructType, partitionCols: Seq[String]): Option[DataFrame] = {
+    // the file source's own rule for what is not a data file
+    def isData(s: FileStatus) = s.isFile && !s.getPath.getName.startsWith("_") &&
+      !s.getPath.getName.startsWith(".")
+    dirs.iterator.flatMap(d => fs.listStatus(d).find(isData)).nextOption().map { file =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val fileSchema = ParquetFileFormat.readSchemaFromFooter(
+        new Footer(file.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      val schema = StructType(fileSchema.filterNot(f => partitionCols.contains(f.name)) ++
+        partitionCols.map(batchSchema(_)))
+      spark.read.schema(schema).option("basePath", targetPath)
+        .parquet(dirs.map(_.toString): _*)
     }
   }
 

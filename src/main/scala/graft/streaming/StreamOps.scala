@@ -54,21 +54,10 @@ object StreamOps {
     * the reference's monthly job. Use as:
     * `df.writeStream.foreachBatch(mergeBatch(path, keys, partCols) _)`. */
   def mergeBatch(targetPath: String, keys: Seq[String], partitionCols: Seq[String])(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    // Only a genuinely missing target means bootstrap; any other read
-    // failure must propagate — treating a transient FS error as "table
-    // does not exist" would overwrite affected partitions with batch-only
-    // rows (silent data loss).
-    val exists = try { spark.read.parquet(targetPath).schema.nonEmpty }
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-        if Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-          .contains(e.getCondition) => false
-    }
-    if (!exists) Upsert.writePartitioned(batch, targetPath, partitionCols)
-    else Upsert.upsertIntoPath(spark, targetPath, batch, keys, partitionCols)
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    // upsertIntoPath bootstraps a missing target itself: none of the
+    // batch's partition directories exists, so the batch is written as it is
+    Upsert.upsertIntoPath(batch.sparkSession, targetPath, batch, keys, partitionCols)
 
   /** DAILY-INGEST composition — what a production continuous-ingest
     * pipeline actually deploys: a file-source stream of arriving batches
@@ -133,8 +122,10 @@ object StreamOps {
       if (nearDup) DedupOps.inBatchNearDedup(
         localExact, idCol, textCol, numHashes, bands, shingleN)
       else localExact
-    // same bootstrap/existence discipline as [[mergeBatch]]: only a
-    // genuinely missing target means bootstrap
+    // only a genuinely missing target means bootstrap; any other read
+    // failure must propagate — treating a transient FS error as "table
+    // does not exist" would overwrite affected partitions with
+    // batch-only rows (silent data loss)
     val exists = try { spark.read.parquet(targetPath).schema.nonEmpty }
     catch {
       case e: org.apache.spark.sql.AnalysisException

@@ -187,8 +187,9 @@ class UpsertSpec extends SparkSpec {
     finally walk.close()
   }
 
-  /** Runs `body` and returns the file scans over `dir` that the actions
-    * it ran executed (the execution-listener bus delivers async). */
+  /** Runs `body` and returns the file scans over `dir` or its partition
+    * directories that the actions it ran executed (the
+    * execution-listener bus delivers async). */
   private def scansOf(dir: String)(body: => Unit)
       : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
     import org.apache.spark.sql.execution._
@@ -216,15 +217,17 @@ class UpsertSpec extends SparkSpec {
     }
     import scala.jdk.CollectionConverters._
     plans.asScala.toSeq.flatMap(flatten).collect {
-      case s: FileSourceScanExec
-        if s.relation.location.rootPaths.exists(_.toUri.getPath.stripSuffix("/") == dir) => s
+      case s: FileSourceScanExec if rootsOf(s).exists(p => p == dir || p.startsWith(dir + "/")) => s
     }
   }
 
+  private def rootsOf(s: org.apache.spark.sql.execution.FileSourceScanExec): Set[String] =
+    s.relation.location.rootPaths.map(_.toUri.getPath.stripSuffix("/")).toSet
+
   test("upsertIntoPath reads only the batch's partitions of the target") {
     // 20 partitions over two levels, one level NULL in four of them; the
-    // batch touches 12 existing partitions (past the IN → InSet
-    // threshold, NULL ones included) and opens one new partition
+    // batch touches 12 existing partitions (NULL ones included) and opens
+    // one new partition
     val dir = Files.createTempDirectory("upsert_pruned").toFile.getAbsolutePath
     val gs = Seq(Some("a"), Some("b"), Some("c"), Some("d"), None)
     val rows = for (g <- gs; n <- 1 to 4; i <- 0 to 1)
@@ -246,7 +249,8 @@ class UpsertSpec extends SparkSpec {
     }
     assert(scans.nonEmpty, "the upsert ran no file scan over the target")
     scans.foreach { s =>
-      assert(s.partitionFilters.nonEmpty, s"target scan is not partition-filtered: $s")
+      assert(rootsOf(s) == touched.map { case (g, n) => partDir(g, n) }.toSet,
+        s"target scan is not rooted at exactly the batch's 12 partition directories: $s")
       assert(s.metrics("numPartitions").value == 12,
         s"target scan read ${s.metrics("numPartitions").value} partitions, not the batch's 12")
     }
@@ -258,6 +262,39 @@ class UpsertSpec extends SparkSpec {
     assert(after.length == expected.size && after.toSet == expected)
     assert(untouched.map { case (g, n) => fileStamps(partDir(g, n)) } == before,
       "an untouched partition was rewritten")
+  }
+
+  test("upsertIntoPath with only new partitions runs no scan of the target") {
+    val dir = Files.createTempDirectory("upsert_new_only").toFile.getAbsolutePath
+    Upsert.writePartitioned(target, dir, Seq("location"))
+    val before = fileStamps(dir)
+    val fresh = Seq(("loc3", "2021-01-01", 30.0), ("loc4", "2021-01-01", 40.0))
+      .toDF("location", "date", "temp")
+    val scans = scansOf(dir) {
+      Upsert.upsertIntoPath(spark, dir, fresh, Seq("location", "date"), Seq("location"))
+    }
+    assert(scans.isEmpty, s"the upsert scanned the target: $scans")
+    val after = spark.read.parquet(dir).select($"location", $"date", $"temp")
+      .as[(String, String, Double)].collect()
+    assert(after.toSet == (target.as[(String, String, Double)].collect() ++
+      fresh.as[(String, String, Double)].collect()).toSet && after.length == 6)
+    val now = fileStamps(dir)
+    assert(before.filter(_._1.startsWith("location=")).forall { case (f, v) =>
+      now.get(f).contains(v) }, "an existing partition was rewritten")
+  }
+
+  test("upsertIntoPath keeps a zero-padded string partition value") {
+    val dir = Files.createTempDirectory("upsert_padded").toFile.getAbsolutePath
+    Upsert.writePartitioned(
+      Seq(("k1", "007", 1.0), ("k2", "007", 2.0)).toDF("name", "code", "temp"),
+      dir, Seq("code"))
+    Upsert.upsertIntoPath(spark, dir,
+      Seq(("k1", "007", 10.0)).toDF("name", "code", "temp"), Seq("name"), Seq("code"))
+    val after = spark.read.parquet(s"$dir/code=007")
+      .select($"name", $"temp").as[(String, Double)].collect()
+    assert(after.toSet == Set(("k1", 10.0), ("k2", 2.0)) && after.length == 2, after.toSeq)
+    assert(!new java.io.File(s"$dir/code=7").exists(), "the upsert wrote a code=7 partition")
+    assert(spark.read.parquet(dir).count() == 2)
   }
 
   test("upsertIntoPath rewrites the NULL partition and keeps its non-superseded rows") {

@@ -27,6 +27,47 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(r.getAs[String]("island") == "Tenerife")
   }
 
+  test("the declared raw schemas equal what JSON inference returns, field order included") {
+    def inferred(glob: String) =
+      spark.read.option("multiLine", true).json(resource("/raw") + glob).schema
+    assert(WeatherPipeline.OpenMeteoSchema == inferred("/*/*/2*.json"))
+    assert(WeatherPipeline.VisualCrossingSchema == inferred("/*/*/vc*.json"))
+  }
+
+  /** A copy of the raw fixtures with `file` rewritten by `edit`; returns
+    * the copy's root and the rewritten file's path. */
+  private def brokenRawZone(file: String, edit: String => String): (String, String) = {
+    import scala.jdk.CollectionConverters._
+    val src = java.nio.file.Paths.get(resource("/raw"))
+    val dst = Files.createTempDirectory("raw_broken")
+    val walk = Files.walk(src)
+    try walk.iterator().asScala.foreach { p =>
+      val t = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally walk.close()
+    val bad = dst.resolve(file)
+    Files.writeString(bad, edit(Files.readString(bad)))
+    (dst.toString, bad.toString)
+  }
+
+  test("a raw file that breaks its declared schema fails the read, naming the file") {
+    val cases = Seq[(String, String => String)](
+      "Tenerife/Vilaflor/vc2021-01-01-to-2021-01-03.json" ->
+        (_.replace("\"uvindex\": 4.0", "\"uvindex\": \"high\"")),
+      "Tenerife/Vilaflor/2021-01-01-to-2021-01-03.json" ->
+        (s => s.take(s.length / 2)))
+    cases.foreach { case (file, edit) =>
+      val (raw, bad) = brokenRawZone(file, edit)
+      assert(Files.readString(java.nio.file.Paths.get(bad)) !=
+        Files.readString(java.nio.file.Paths.get(resource(s"/raw/$file"))))
+      val e = intercept[org.apache.spark.SparkException] {
+        WeatherPipeline.transform(spark, raw).count()
+      }
+      assert(e.getMessage.contains("FAILED_READ_FILE") && e.getMessage.contains(bad),
+        e.getMessage)
+    }
+  }
+
   test("bulk run writes hive-partitioned parquet; re-run is idempotent") {
     val out = Files.createTempDirectory("clean").toFile.getAbsolutePath
     WeatherPipeline.run(spark, resource("/raw"), out)
